@@ -421,9 +421,9 @@ def main() -> None:
         "notes": {
             "doc_knn_query_documentation": "embeds JVM-native since r11 (was Arrow UDF)",
             "doc_knn_query_native": "exercises the Arrow-UDF provider seam since r11 (was native). r17 solo re-measure (VERDICT r16 #3): median 2.244 s at calibration 0.715 -> NORMALIZED 3.14, inside the r12-r15 band (the r16 1.51 s reading normalized 5.9 was window weather, not a seam regression)",
-            "ann_ivf_search_trained": "since r16 trained centroids load from the train_cache disk tier — no first-rep training (was the r13-r15 first-rep stall)",
-            "doc_knn_query_routed": "since r16 the IVF route's trained centroids load from the train_cache disk tier — no first-rep training",
-            "ann_ivf_pq_search_trained": "since r16 coarse centroids + PQ codebooks load from the train_cache disk tier — no first-rep training (the r13 6.95 s / r15 8.6 s stalls were this)",
+            "ann_ivf_search_trained": "since r16 trained centroids load from the trained-artifact disk tier — no first-rep training (was the r13-r15 first-rep stall)",
+            "doc_knn_query_routed": "since r16 the IVF route's trained centroids load from the trained-artifact disk tier — no first-rep training",
+            "ann_ivf_pq_search_trained": "since r16 coarse centroids + PQ codebooks load from the trained-artifact disk tier — no first-rep training (the r13 6.95 s / r15 8.6 s stalls were this)",
         },
     }
     # Subset runs (SPARK_GRAFT_BENCH_ONLY — scaling rehearsals, one-off

@@ -159,8 +159,10 @@ def with_embeddings_native(
     """Drop-in for ``embedding.with_embeddings`` on the stub provider: one
     whole-stage-codegen projection, no Python boundary, no Arrow transfer.
     (r22 batch 8: the projection arrives via the single-parse SQL template
-    above — identical tree, one parser call.)"""
-    return df.withColumn(out_col, F.expr(_embedding_sql(f"`{text_col}`", dim)))
+    above — identical tree, one parser call.) ``text_col`` is quoted as a
+    SQL identifier, embedded backticks doubled."""
+    quoted = "`" + text_col.replace("`", "``") + "`"
+    return df.withColumn(out_col, F.expr(_embedding_sql(quoted, dim)))
 
 
 def _knn_native_oracle() -> str:

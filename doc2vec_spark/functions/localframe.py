@@ -8,7 +8,8 @@ LocalRelation for an 8-row frame on local[32]. Bounded literal tails and
 broadcast LUTs go through ``local_frame`` instead: the VALUES form folds to
 one ``LocalTableScan`` and every cell round-trips exactly —
 
-- int/None cells: ``CAST(<literal> AS BIGINT/INT)``;
+- int/None cells: ``CAST(<literal> AS BIGINT/INT)``, range-checked
+  (an int outside the type's range raises);
 - double cells: ``<repr>D`` — Python repr is the shortest string that
   round-trips the IEEE value and Spark's parser rounds correctly, so the
   stored double is bit-identical (the r21 evalmetrics ``{x!r}D``
@@ -33,6 +34,9 @@ _SQL_TYPES = {
     "double": "DOUBLE",
     "string": "STRING",
 }
+# inclusive value ranges: Spark would read an out-of-range literal as NULL
+# or wrap it, so such a cell raises instead
+_INT_RANGES = {"BIGINT": (-(2**63), 2**63 - 1), "INT": (-(2**31), 2**31 - 1)}
 
 
 def _cell(v, tp: str) -> str:
@@ -41,6 +45,9 @@ def _cell(v, tp: str) -> str:
     if tp in ("BIGINT", "INT"):
         if isinstance(v, bool) or not isinstance(v, int):
             raise TypeError(f"{tp} cell must be int/None, got {v!r}")
+        lo, hi = _INT_RANGES[tp]
+        if not lo <= v <= hi:
+            raise TypeError(f"{tp} cell out of range: {v!r}")
         return f"CAST({v} AS {tp})"
     if tp == "DOUBLE":
         if isinstance(v, bool) or not isinstance(v, (int, float)):

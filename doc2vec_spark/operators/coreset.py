@@ -48,6 +48,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2vec_spark.artifacts import (
+    cell_id,
+    finite_components,
+    get_or_build,
+    integer_components,
+)
+from doc2vec_spark.measurement import parquet_parts
 from doc2vec_spark.spec import QuerySpec
 from doc2vec_spark.tables import load
 
@@ -104,55 +111,45 @@ def embeddings_with_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Selected-centers memo (the kmeans _TRAIN_MEMO discipline): a production
-# coreset build SELECTS once and every audit/consumer reuses the k centers;
-# pipe_coreset_fps / pipe_coreset_coverage / kmeans seeding each re-paid
-# the k driver-paced rounds without it. Selection is deterministic, the
-# state is k bounded tuples, and the key carries the dataset fingerprint
-# so a rewrite under the same path re-selects. Only the default corpus
-# path memoizes — explicit `e` frames (kmeans' training sample) bypass it.
-_FPS_MEMO: dict[tuple, list] = {}
-
-
 def dataset_fingerprint(sf_dir: str, table: str = "embeddings") -> tuple:
-    """Per-FILE (relpath, mtime_ns, size) fold of the table's parquet —
-    the memo-invalidation key; () for non-local/unreadable paths.
-
-    Recurses like measurement.corpus_parquet_bytes (VERDICT r20 #1, fixed
-    r22): for a NESTED directory layout (store.py's partitionBy shape) the
-    old one-level fold fingerprinted the bucket=K subdirectory inodes, and
-    an in-place rewrite of a part file two levels down does not bump the
-    parent dir's mtime — the memo would have served stale FPS centers.
-    Dot/underscore entries (_SUCCESS, .crc, _delta_log) are pruned at every
-    level; any traversal error makes the whole fingerprint () so unknown
-    provenance always re-selects (the ADVICE r12 discipline)."""
-    import os
-
-    def _raise(err: OSError):
-        # os.walk swallows scandir errors by default — that would return a
-        # PARTIAL fingerprint that can collide with a complete one. Route
-        # every traversal error to the except: unreadable bypasses the memo.
-        raise err
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
+    """Per-FILE (relpath, mtime_ns, size) fold of the table's parquet over
+    measurement.parquet_parts (recursive: VERDICT r20 #1, fixed r22 — an
+    in-place rewrite of a nested part file must change it); a single-file
+    table is (mtime_ns, size). () for non-local/unreadable paths, so
+    unknown provenance never reaches the artifact cache (ADVICE r12)."""
     try:
-        if os.path.isdir(path):
-            parts = []
-            for root, dirs, files in os.walk(path, onerror=_raise):
-                dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    fp = os.path.join(root, f)
-                    st = os.stat(fp)
-                    parts.append(
-                        (os.path.relpath(fp, path), st.st_mtime_ns, st.st_size)
-                    )
-            return tuple(sorted(parts))
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
+        parts = parquet_parts(sf_dir, table)
     except OSError:
         return ()
+    if len(parts) == 1 and parts[0][0] == "":
+        return (parts[0][1].st_mtime_ns, parts[0][1].st_size)
+    return tuple((rel, st.st_mtime_ns, st.st_size) for rel, st in parts)
+
+
+def dataset_version(sf_dir: str, *params) -> tuple | None:
+    """The artifact data version of a registry embeddings table:
+    (sf_dir, fingerprint, *params), or None when the fingerprint is
+    unknown."""
+    fp = dataset_fingerprint(sf_dir)
+    return (sf_dir, fp, *params) if fp else None
+
+
+def _decode_centers(payload) -> list[tuple[int, int, int | None, list[float]]] | None:
+    """Validated fresh copy of a stored fps_select payload, else None. The
+    rank is range-checked like a cell id: coverage packs it as
+    d6 * 100 + rank."""
+    if not isinstance(payload, list) or not payload:
+        return None
+    out = []
+    for t in payload:
+        if not isinstance(t, (list, tuple)) or len(t) != 4:
+            return None
+        rank, vid, d6, vec = cell_id(t[0]), t[1], t[2], finite_components(t[3])
+        ints = integer_components([vid] if d6 is None else [vid, d6])
+        if rank is None or ints is None or vec is None:
+            return None
+        out.append((rank, vid, d6, vec))
+    return out
 
 
 def fps_select(
@@ -167,55 +164,54 @@ def fps_select(
     ASC). One map-only job per round; assumes the source holds >= k rows
     (every driver SF does). ``e`` overrides the source frame (kmeans.py
     passes its bounded training sample) — it must carry (vec_id, v, nv).
-    The default corpus path memoizes per (sf_dir, fingerprint, k); an
-    empty fingerprint (non-local path / unknown layout) bypasses the memo
-    entirely so unknown-provenance data always re-selects (ADVICE r12)."""
-    own = e is None
-    fp = dataset_fingerprint(sf_dir) if own else None
-    key = (sf_dir, fp, k) if own and fp else None
-    if key is not None and key in _FPS_MEMO:
-        # DEEP copy: element 3 is a mutable vector list — a shallow tuple
-        # copy would hand every caller the memo's own list objects
-        # (round-13 review finding on the ADVICE r12 fix)
-        return [(r, vid, d, list(vec)) for r, vid, d, vec in _FPS_MEMO[key]]
-    if own:
-        e = embeddings_with_norms(spark, sf_dir).cache()
-    try:
-        seeds = e.orderBy("vec_id").limit(1).collect()
-        if not seeds:
-            return []  # empty source: no centers (callers emit 0 rows)
-        seed = seeds[0]
-        selected: list[tuple[int, int, int | None, list[float]]] = [
-            (1, seed["vec_id"], None, list(seed["v"]))
+    The default corpus path is cached in artifacts per (sf_dir,
+    fingerprint, k); an unknown fingerprint (non-local path / unknown
+    layout) always re-selects (ADVICE r12)."""
+    if e is not None:
+        return _fps_rounds(e, k)
+
+    def build():
+        corpus = embeddings_with_norms(spark, sf_dir).cache()
+        try:
+            return _fps_rounds(corpus, k)
+        finally:
+            corpus.unpersist(False)
+
+    return get_or_build(
+        "fps", lambda: dataset_version(sf_dir, k), build, _decode_centers
+    )
+
+
+def _fps_rounds(
+    e: DataFrame, k: int
+) -> list[tuple[int, int, int | None, list[float]]]:
+    seeds = e.orderBy("vec_id").limit(1).collect()
+    if not seeds:
+        return []  # empty source: no centers (callers emit 0 rows)
+    seed = seeds[0]
+    selected: list[tuple[int, int, int | None, list[float]]] = [
+        (1, seed["vec_id"], None, list(seed["v"]))
+    ]
+    for rank in range(2, k + 1):
+        ds = [
+            _d6_int(F.col("v"), F.col("nv"), vec) for _, _, _, vec in selected
         ]
-        for rank in range(2, k + 1):
-            ds = [
-                _d6_int(F.col("v"), F.col("nv"), vec) for _, _, _, vec in selected
-            ]
-            mind = ds[0] if len(ds) == 1 else F.least(*ds)
-            picked = (
-                e.filter(~F.col("vec_id").isin([vid for _, vid, _, _ in selected]))
-                .select("vec_id", "v", mind.alias("d6"))
-                .orderBy(F.desc("d6"), F.asc("vec_id"))
-                .limit(1)
-                .collect()
-            )
-            if not picked:
-                # candidate pool exhausted (source < k rows — only possible
-                # for caller-supplied frames, e.g. a tiny serving corpus
-                # forced onto the IVF tier): every row IS a center
-                break
-            pick = picked[0]
-            selected.append((rank, pick["vec_id"], pick["d6"], list(pick["v"])))
-        if key is not None:
-            # store a DEEP copy (vectors included) so a caller mutating the
-            # returned list — or its vector lists — can never corrupt later
-            # cache hits (ADVICE r12 + round-13 review)
-            _FPS_MEMO[key] = [(r, vid, d, list(vec)) for r, vid, d, vec in selected]
-        return selected
-    finally:
-        if own:
-            e.unpersist(False)
+        mind = ds[0] if len(ds) == 1 else F.least(*ds)
+        picked = (
+            e.filter(~F.col("vec_id").isin([vid for _, vid, _, _ in selected]))
+            .select("vec_id", "v", mind.alias("d6"))
+            .orderBy(F.desc("d6"), F.asc("vec_id"))
+            .limit(1)
+            .collect()
+        )
+        if not picked:
+            # candidate pool exhausted (source < k rows — only possible
+            # for caller-supplied frames, e.g. a tiny serving corpus
+            # forced onto the IVF tier): every row IS a center
+            break
+        pick = picked[0]
+        selected.append((rank, pick["vec_id"], pick["d6"], list(pick["v"])))
+    return selected
 
 
 # ---------------------------------------------------------------------------

@@ -52,11 +52,12 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2vec_spark.artifacts import cell_map, get_or_build, integer_components
 from doc2vec_spark.operators.coreset import (
     _E_CTE,
     _d6_int,
     _fps_recursion,
-    dataset_fingerprint,
+    dataset_version,
     embeddings_with_norms,
     fps_select,
 )
@@ -110,72 +111,41 @@ def _sample_e(
     ).limit(KM_SAMPLE_N)
 
 
-# Trained-centroid memo: a production IVF build trains the quantizer ONCE
-# and every downstream pass (assignment, posting build, search, pruning)
-# consumes the same centroid table — five registry queries model those
-# passes, and without the memo each one re-paid the full FPS + Lloyd loop
-# (measured: ann_ivf_search_trained 19.7 s inside a full-registry bench,
-# almost all of it redundant retraining). Training is DETERMINISTIC
-# (md5-ordered sample, integer arithmetic), so memoizing is pure; the
-# state is k * dim longs per sf_dir — bounded driver state, not a Spark
-# cache, so scoped-cache releases never touch it. The key carries a
-# dataset fingerprint (mtime+size of the embeddings parquet, review
-# finding r12): a rewrite under the same path must retrain, or the memo
-# would serve centroids of the OLD data while the oracle re-reads the new.
-_TRAIN_MEMO: dict[tuple, dict[int, list[int]]] = {}
-
-
-
 def train_kmeans(
     spark: SparkSession, sf_dir: str, frame: DataFrame | None = None
 ) -> dict[int, list[int]]:
     """{cell: [fp components]} after KM_ITERS Lloyd iterations from the FPS
     init, trained on the bounded sample. Driver state per iteration is
     k*dim longs; each iteration costs one sample-sized assignment scan +
-    one integer-sum shuffle. Memoized per (sf_dir, dataset fingerprint,
-    K, iters) — see _TRAIN_MEMO; an empty fingerprint (non-local path /
-    unknown layout) bypasses the memo so unknown-provenance data always
-    retrains (ADVICE r12). ``frame`` overrides the source (the serving
-    tier trains over an arbitrary (vec_id, v, nv) frame) — frames bypass
-    the memo (no fingerprintable provenance); a serving deployment
-    persists the returned centroid table instead (query.py seam)."""
-    own = frame is None
-    fp_key = dataset_fingerprint(sf_dir) if own else None
-    key = (sf_dir, fp_key, KM_K, KM_ITERS) if own and fp_key else None
-    if key is not None and key in _TRAIN_MEMO:
-        return {c: list(v) for c, v in _TRAIN_MEMO[key].items()}
-    # cross-session disk tier (train_cache.py): same key plus this module's
-    # spec digest, so a code edit that could change the trained centroids
-    # retrains while an unchanged algorithm over unchanged data loads in
-    # O(k*dim) — a fresh bench/driver session skips the Lloyd jobs entirely
-    if key is not None:
-        from doc2vec_spark import train_cache
+    one integer-sum shuffle.
 
-        disk_key = key + (train_cache.module_digest(__name__),)
-        hit = train_cache.get("km", disk_key)
-        if isinstance(hit, dict) and hit:
-            # value-corrupt entries read as absent -> fall through to
-            # retrain (the index_store._finite_floats contract; a hand
-            # edit or interrupted write must never crash the query path).
-            # r17: shared validators (ADVICE r16 #1/#2) — the old bare
-            # int() accepted numeric strings and crashed with
-            # OverflowError on JSON Infinity; cell ids are range-checked
-            # against the %100 packing cap so a persisted out-of-range id
-            # can never silently collide.
-            cents = {}
-            for c, v in hit.items():
-                ci = train_cache.cell_id(c)
-                comps = train_cache.integer_components(v)
-                if ci is None or comps is None:
-                    cents = None
-                    break
-                cents[ci] = comps
-            # cardinality check (r17 review): two keys normalizing to one
-            # cell id ("7" + "07") would silently DROP a centroid; a
-            # colliding payload reads as absent like any other corruption
-            if cents and len(cents) == len(hit):
-                _TRAIN_MEMO[key] = {c: list(v) for c, v in cents.items()}
-                return cents
+    A production IVF build trains the quantizer ONCE and every downstream
+    pass (assignment, posting build, search, pruning) consumes the same
+    centroid table — five registry queries model those passes, and without
+    a cache each one re-paid the full FPS + Lloyd loop (measured:
+    ann_ivf_search_trained 19.7 s inside a full-registry bench). Training
+    is deterministic, so the table is cached in artifacts per (sf_dir,
+    dataset fingerprint) and this module's spec digest; an unknown
+    fingerprint (non-local path / unknown layout) always retrains (ADVICE
+    r12). ``frame`` overrides the source (the serving tier trains over an
+    arbitrary (vec_id, v, nv) frame) and is never cached here — its
+    callers key it by store commit or frame identity."""
+
+    def build():
+        cents = _lloyd(spark, sf_dir, frame)
+        return {str(c): v for c, v in cents.items()}
+
+    return get_or_build(
+        "km",
+        lambda: None if frame is not None else dataset_version(sf_dir),
+        build,
+        lambda p: cell_map(p, integer_components),
+    )
+
+
+def _lloyd(
+    spark: SparkSession, sf_dir: str, frame: DataFrame | None
+) -> dict[int, list[int]]:
     e = _sample_e(spark, sf_dir, frame).cache()
     try:
         cents: dict[int, list[int]] = {
@@ -219,15 +189,6 @@ def train_kmeans(
                 new.setdefault(r["cell"], [0] * len(cents[0]))[r["dim"]] = r["fp"]
             # empty cells keep their previous centroid
             cents = {c: new.get(c, cents[c]) for c in sorted(cents)}
-        if key is not None:
-            _TRAIN_MEMO[key] = {c: list(v) for c, v in cents.items()}
-            from doc2vec_spark import train_cache
-
-            train_cache.put(
-                "km",
-                key + (train_cache.module_digest(__name__),),
-                {str(c): list(v) for c, v in cents.items()},
-            )
         return cents
     finally:
         e.unpersist(False)
@@ -500,15 +461,14 @@ def ann_kmeans_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-only assignment pass over the seeded variant.",
 )
 def ann_ivf_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cents_probe = train_kmeans(spark, sf_dir)
-    if not _cents_probe:  # empty embeddings: oracle emits 0 rows
+    cents = train_kmeans(spark, sf_dir)
+    if not cents:  # empty embeddings: oracle emits 0 rows
         return spark.createDataFrame([], "vec_id long, rnk int, distance double")
     from pyspark.sql import Window
 
     from doc2vec_spark.functions.rounding import pround
     from doc2vec_spark.functions.vectors import cosine_distance_lit
 
-    cents = train_kmeans(spark, sf_dir)
     e = embeddings_with_norms(spark, sf_dir)
     o = F.least(
         *[

@@ -483,26 +483,21 @@ class SyncStateStore:
     def get(self, key: str, default: str | None = None) -> str | None:
         return self._load().get(key, default)
 
-    def put(self, key: str, value: str) -> None:
-        state = self._load()
-        state[key] = value
+    def _save(self, state: dict[str, str]) -> None:
         tmp = self.path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f)
         os.replace(tmp, self.path)
+
+    def put(self, key: str, value: str) -> None:
+        self.put_many({key: value})
 
     def put_many(self, items: dict[str, str]) -> None:
         state = self._load()
         state.update(items)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self._save(state)
 
     def delete(self, key: str) -> None:
         state = self._load()
         state.pop(key, None)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self._save(state)

@@ -85,13 +85,14 @@ def main() -> None:
     ]
     print(f"small-corpus fallthrough == exact scan: {same}")
 
-    # 5. the PERSISTED lifecycle (round 14): sync into a ChunkStore, persist
-    #    the trained index beside the sync watermarks, reload WITHOUT
-    #    retraining, and watch a rewrite invalidate it by commit
+    # 5. the PERSISTED lifecycle: sync into a ChunkStore, train the index
+    #    once per commit (cached by the store's version token in memory and
+    #    on disk), reload WITHOUT retraining, and watch a rewrite invalidate
+    #    it by commit
     import tempfile
 
-    from doc2vec_spark.index_store import (
-        AnnIndexStore,
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators.serving import (
         ensure_chunk_ann_index,
         ensure_pq_codebooks,
     )
@@ -101,24 +102,26 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as td:
         store = ChunkStore(spark, f"{td}/chunks")
         sync_documents(spark, store, docs)
-        ixs = AnnIndexStore(f"{td}/sync_state.json")
-        idx1 = ensure_chunk_ann_index(store, ixs)  # trains + persists
-        idx2 = ensure_chunk_ann_index(store, ixs)  # loads, no retraining
+        idx1 = ensure_chunk_ann_index(store)  # trains + caches
+        idx2 = ensure_chunk_ann_index(store)  # loads, no retraining
         print(f"persisted index reload identical: {idx1 == idx2}")
-        # the PQ codebooks persist under the SAME version token (round 16):
-        # a deployment trains both quantizers once per sync and every later
+        # the PQ codebooks are cached under the SAME version token: a
+        # deployment trains both quantizers once per sync and every later
         # session serves trained-PQ ADC scans without the Lloyd loop
-        cbs1 = ensure_pq_codebooks(store, ixs)  # trains + persists
-        cbs2 = ensure_pq_codebooks(store, ixs)  # loads, no retraining
+        cbs1 = ensure_pq_codebooks(store)  # trains + caches
+        cbs2 = ensure_pq_codebooks(store)  # loads, no retraining
         print(f"persisted PQ codebooks reload identical: {cbs1 == cbs2}")
         sync_documents(  # rewrite -> version token moves -> index stale
             spark, store,
             docs.withColumn("markdown", F.concat(F.col("markdown"), F.lit(" updated"))),
         )
-        print(f"stale after rewrite: {ixs.load(store.version_token()) is None}")
-        print(
-            f"PQ stale after rewrite: {ixs.load_pq(store.version_token()) is None}"
-        )
+        for label, kind, ensure in (
+            ("", "ann_index", ensure_chunk_ann_index),
+            ("PQ ", "ann_pq", ensure_pq_codebooks),
+        ):
+            misses = artifacts.stats(kind)["misses"]
+            ensure(store)  # the new commit is a new version: retrains
+            print(f"{label}stale after rewrite: {artifacts.stats(kind)['misses'] > misses}")
 
     chunks.unpersist()
 

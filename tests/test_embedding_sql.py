@@ -81,3 +81,41 @@ def test_stub_feature_bitwise_matches_duckdb():
     for s, v in rows:
         py = np.array(_stub_feature(s.encode("utf-8")), dtype=np.float32)
         assert (py == np.array(v, dtype=np.float32)).all()
+
+
+def test_backtick_column_name_embeds_like_embedding_col(spark, monkeypatch):
+    """with_embeddings_native quotes its text column as a SQL identifier
+    with embedded backticks doubled: a column named with a backtick embeds
+    bit-identically to the Column-built fold over the same values, and
+    the SQL for the sync path's `content` column is unchanged."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from doc2vec_spark import embedding_native
+    from doc2vec_spark.embedding_native import embedding_col, with_embeddings_native
+
+    col = "odd`name"
+    df = spark.createDataFrame(
+        [(1, "hello world"), (2, ""), (3, None), (4, "unié中文 `tick`")],
+        f"doc_id long, `{col.replace('`', '``')}` string",
+    )
+    ref = df.withColumn("embedding", embedding_col(F.col(f"`{col.replace('`', '``')}`")))
+    got = with_embeddings_native(df, text_col=col)
+
+    def bits(frame):
+        return [
+            tuple(struct.pack("<f", x) for x in r["embedding"])
+            for r in frame.orderBy("doc_id").collect()
+        ]
+
+    assert bits(got) == bits(ref)
+    # the sync path's SQL: the identifier text the template receives for
+    # `content` is exactly what it was before escaping existed
+    seen = []
+    real = embedding_native._embedding_sql
+    monkeypatch.setattr(
+        embedding_native, "_embedding_sql", lambda t, d: seen.append(t) or real(t, d)
+    )
+    with_embeddings_native(df.withColumnRenamed(col, "content"))
+    assert seen == ["`content`"]

@@ -370,3 +370,17 @@ def test_round8_plan_shapes(spark):
     assert "TakeOrderedAndProject" in rr
 
     assert_broadcast_join(_q("ev_rate_anomaly", spark))
+
+
+def test_constant_key_scalar_joins_execute_broadcast_hash(spark):
+    """ta_kn_bigram_score and ta_pmi_collocations attach a 1-row total
+    frame through a non-foldable constant key (pmod(xxhash64(x), 1)). The
+    executed plan must join it with a BroadcastHashJoin: a foldable key
+    constant-folds into the BroadcastNestedLoopJoin the design bans."""
+    for name in ("ta_kn_bigram_score", "ta_pmi_collocations"):
+        df = _q(name, spark)
+        df.collect()  # the final adaptive plan is what executed
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, name
+        assert "BroadcastHashJoin" in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name

@@ -63,28 +63,38 @@ def test_fps_memo_returns_independent_copies(spark):
     assert len(again) == len(first) - 1
 
 
+def _builds_every_call(kind, fn, n=2):
+    """fn() never hits the artifact cache: every call is a build."""
+    from doc2vec_spark import artifacts
+
+    for _ in range(n):
+        before = artifacts.stats(kind)
+        out = fn()
+        after = artifacts.stats(kind)
+        assert after["misses"] == before["misses"] + 1
+        assert after["memory_hits"] == before["memory_hits"]
+        assert after["disk_hits"] == before["disk_hits"]
+    return out
+
+
 def test_fps_memo_bypassed_on_unknown_fingerprint(spark, monkeypatch):
     """ADVICE r12: fingerprint () (non-local path / unknown layout) must skip
-    the memo entirely — no lookup, no store — so a data rewrite under an
+    the cache entirely — no lookup, no store — so a data rewrite under an
     unfingerprintable path always re-selects."""
     from doc2vec_spark.operators import coreset
 
     monkeypatch.setattr(coreset, "dataset_fingerprint", lambda *a, **k: ())
-    before = dict(coreset._FPS_MEMO)
-    out = coreset.fps_select(spark, SF_DIR, k=2)
+    out = _builds_every_call("fps", lambda: coreset.fps_select(spark, SF_DIR, k=2))
     assert len(out) == 2
-    assert coreset._FPS_MEMO == before  # nothing stored under a () key
 
 
 def test_kmeans_memo_bypassed_on_unknown_fingerprint(spark, monkeypatch):
-    """Same bypass for the kmeans trainer's memo (shares the finding)."""
-    from doc2vec_spark.operators import kmeans
+    """Same bypass for the kmeans trainer (shares the finding)."""
+    from doc2vec_spark.operators import coreset, kmeans
 
-    monkeypatch.setattr(kmeans, "dataset_fingerprint", lambda *a, **k: ())
-    before = dict(kmeans._TRAIN_MEMO)
-    cents = kmeans.train_kmeans(spark, SF_DIR)
+    monkeypatch.setattr(coreset, "dataset_fingerprint", lambda *a, **k: ())
+    cents = _builds_every_call("km", lambda: kmeans.train_kmeans(spark, SF_DIR))
     assert len(cents) == kmeans.KM_K
-    assert kmeans._TRAIN_MEMO == before
 
 
 # ---------------------------------------------------------------------------
@@ -748,20 +758,23 @@ def test_nearest_cell_matches_engine_assignment(spark):
     chunks.unpersist()
 
 
-def test_routed_api_trains_once_per_frame(spark, monkeypatch):
+def test_routed_api_trains_once_per_frame(spark, monkeypatch, tmp_path):
     """Review finding: without an explicit index, repeated serving calls
     over the same frame must reuse the trained quantizer (one build), not
     retrain per query."""
+    from doc2vec_spark import artifacts
     from doc2vec_spark.chunking import chunk_documents
     from doc2vec_spark.embedding import with_embeddings
     from doc2vec_spark.operators import serving
+
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(tmp_path / "cache"))
 
     docs = spark.createDataFrame(
         [(f"https://d/y{i}.md", f"# H{i}\n" + f"q{i} " * 30, "p", "1") for i in range(6)],
         "url string, markdown string, product_name string, version string",
     )
     chunks = with_embeddings(chunk_documents(docs)).cache()
-    serving._INDEX_MEMO.clear()
+    artifacts.clear_memory()
     calls = {"n": 0}
     real = serving.build_chunk_ann_index
 
@@ -773,7 +786,7 @@ def test_routed_api_trains_once_per_frame(spark, monkeypatch):
     serving.query_documentation_routed(chunks, "q1", ann_threshold=0, k=2).collect()
     serving.query_documentation_routed(chunks, "q2 q3", ann_threshold=0, k=2).collect()
     assert calls["n"] == 1
-    serving._INDEX_MEMO.clear()
+    artifacts.clear_memory()
     chunks.unpersist()
 
 

@@ -3,6 +3,8 @@ trained PQ codebooks, and the persisted ANN index lifecycle."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -145,35 +147,38 @@ def test_persisted_ann_index_survives_sessions_and_rewrites(
     spark, tmp_path, monkeypatch
 ):
     """VERDICT r13 #2's lifecycle gate, both halves:
-    1. sync -> persisted index -> a NEW consumer (fresh AnnIndexStore over
-       the same path, train forcibly disabled) probes without retraining
-       and gets the bitwise-identical index;
+    1. sync -> cached index -> a NEW session (in-process tier cleared,
+       train forcibly disabled) loads from disk without retraining and
+       gets the bitwise-identical index;
     2. a rewrite of the chunk data — plan-identical (same store path, same
        read() plan) — must serve the NEW index, not the stale one."""
-    from doc2vec_spark import index_store as ixs
-    from doc2vec_spark.index_store import AnnIndexStore, ensure_chunk_ann_index
+    from doc2vec_spark import artifacts
     from doc2vec_spark.operators import serving
+    from doc2vec_spark.operators.serving import ensure_chunk_ann_index
     from doc2vec_spark.sync import sync_documents
 
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(tmp_path / "cache"))
     bodies = [f"# D{i}\ndocumentation paragraph about topic {i}. " * 25 for i in range(6)]
     store = _sync_store(spark, tmp_path, bodies)
-    kv_path = str(tmp_path / "sync_state.json")
 
-    idx1 = ensure_chunk_ann_index(store, AnnIndexStore(kv_path))
+    idx1 = ensure_chunk_ann_index(store)
     assert idx1 and all(isinstance(c, int) for c in idx1)
 
-    # (1) new session: a fresh consumer must LOAD, never retrain
+    # (1) new session: a fresh process must LOAD, never retrain
     def _no_train(*a, **k):
         raise AssertionError("retrained despite a current persisted index")
 
-    monkeypatch.setattr(serving, "build_chunk_ann_index", _no_train)
-    idx2 = ensure_chunk_ann_index(store, AnnIndexStore(kv_path))
+    artifacts.clear_memory()
+    with monkeypatch.context() as m:
+        m.setattr(serving, "build_chunk_ann_index", _no_train)
+        hits = artifacts.stats("ann_index")["disk_hits"]
+        idx2 = ensure_chunk_ann_index(store)
+        assert artifacts.stats("ann_index")["disk_hits"] == hits + 1
     assert idx2 == idx1
-    monkeypatch.undo()
 
     # (2) rewrite under the same plan: the sync commit moves the version
     # token, so the stale index must NOT be served — it retrains on the
-    # new data and persists the new version
+    # new data and caches the new version
     docs2 = spark.createDataFrame(
         [
             (f"https://d/{i}", f"# D{i}\nreplaced corpus text {i}. " * 30, "prod", "2.0")
@@ -182,18 +187,22 @@ def test_persisted_ann_index_survives_sessions_and_rewrites(
         "url string, markdown string, product_name string, version string",
     )
     sync_documents(spark, store, docs2)
-    assert AnnIndexStore(kv_path).load(store.version_token()) is None  # stale-by-commit
-    idx3 = ensure_chunk_ann_index(store, AnnIndexStore(kv_path))
+    misses = artifacts.stats("ann_index")["misses"]
+    idx3 = ensure_chunk_ann_index(store)  # stale-by-commit: retrains
+    assert artifacts.stats("ann_index")["misses"] == misses + 1
     assert idx3 != idx1  # trained on the rewritten data
-    assert AnnIndexStore(kv_path).load(store.version_token()) == idx3
+    assert ensure_chunk_ann_index(store) == idx3
+    assert artifacts.stats("ann_index")["misses"] == misses + 1
 
 
 def test_persisted_index_feeds_routed_query(spark, tmp_path):
     """End to end: the persisted index drives query_documentation_routed's
-    probe (index= bypasses the plan-hash memo entirely) and still surfaces
-    the planted document."""
-    from doc2vec_spark.index_store import AnnIndexStore, ensure_chunk_ann_index
-    from doc2vec_spark.operators.serving import query_documentation_routed
+    probe (index= bypasses the frame-keyed routed cache entirely) and still
+    surfaces the planted document."""
+    from doc2vec_spark.operators.serving import (
+        ensure_chunk_ann_index,
+        query_documentation_routed,
+    )
 
     phrase = "the zanzibar quokka protocol handles vector reconciliation"
     # the planted markdown is the bare phrase (no heading) so its chunk
@@ -203,7 +212,7 @@ def test_persisted_index_feeds_routed_query(spark, tmp_path):
         f"# F{i}\nordinary filler documentation {i}. " * 25 for i in range(5)
     ]
     store = _sync_store(spark, tmp_path, bodies)
-    index = ensure_chunk_ann_index(store, AnnIndexStore(str(tmp_path / "kv.json")))
+    index = ensure_chunk_ann_index(store)
     hits = query_documentation_routed(
         store.read(), phrase, index=index, k=3
     ).collect()
@@ -232,25 +241,39 @@ def test_pq_codebook_training_matches_oracle_ctes(spark, duck):
         assert list(c) == engine[m][j], (m, j)
 
 
-def test_index_store_corrupt_payload_and_invalidate(spark, tmp_path):
-    """A corrupted persisted payload must read as absent (retrain), never
-    raise into the serving path; invalidate() removes only the index key."""
-    from doc2vec_spark.index_store import INDEX_KEY, AnnIndexStore
+def test_index_store_corrupt_payload_and_invalidate(spark, tmp_path, monkeypatch):
+    """A corrupted cached entry must read as absent (retrain), never raise
+    into the serving path; a commit invalidates the index, and the sync
+    watermarks beside the store are untouched by any of it."""
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators.serving import ensure_chunk_ann_index
+    from doc2vec_spark.store import SyncStateStore
+    from doc2vec_spark.sync import sync_documents
 
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    tok = (1, (("0", "x"),))
-    ixs.save({0: [0.5, 0.25], 1: [1.0, 2.0]}, tok)
-    assert ixs.load(tok) == {0: [0.5, 0.25], 1: [1.0, 2.0]}
-    assert ixs.load((2, ())) is None  # different committed version
+    root = tmp_path / "cache"
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
+    kv = SyncStateStore(str(tmp_path / "kv.json"))
+    kv.put("watermark:other", "keep-me")
+    store = _sync_store(
+        spark, tmp_path, [f"# D{i}\ncorpus text {i}. " * 25 for i in range(4)]
+    )
+    idx = ensure_chunk_ann_index(store)
+    (entry,) = root.glob("*.json")
+    entry.write_text("{not json")
+    artifacts.clear_memory()
+    before = artifacts.stats("ann_index")
+    assert ensure_chunk_ann_index(store) == idx  # retrained, same data
+    after = artifacts.stats("ann_index")
+    assert after["rejected"] == before["rejected"] + 1
+    assert after["misses"] == before["misses"] + 1
 
-    ixs.kv.put(INDEX_KEY, "{not json")
-    assert ixs.load(tok) is None
-
-    ixs.save({0: [0.5]}, tok)
-    ixs.kv.put("watermark:other", "keep-me")
-    ixs.invalidate()
-    assert ixs.load(tok) is None
-    assert ixs.kv.get("watermark:other") == "keep-me"
+    docs2 = spark.createDataFrame(
+        [(f"https://d/{i}", f"# D{i}\nother text {i}. " * 25, "prod", "2.0") for i in range(4)],
+        "url string, markdown string, product_name string, version string",
+    )
+    sync_documents(spark, store, docs2)
+    assert ensure_chunk_ann_index(store) != idx  # invalidated by commit
+    assert kv.get("watermark:other") == "keep-me"
 
 
 def test_nprobe_probe_is_membership_filter_not_join(spark):
@@ -282,15 +305,19 @@ def test_routed_api_empty_index_and_bad_nprobe(spark, tmp_path):
     """Review r14: an EMPTY trained index (fresh tenant) must fall through
     to the exact scan instead of crashing on a zero-arm least()/probed[0];
     nprobe < 1 is a ValueError, not a silent empty/near-full scan."""
-    from doc2vec_spark.index_store import AnnIndexStore, ensure_chunk_ann_index
-    from doc2vec_spark.operators.serving import query_documentation_routed
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators.serving import (
+        ensure_chunk_ann_index,
+        query_documentation_routed,
+    )
     from doc2vec_spark.store import ChunkStore
 
     store = ChunkStore(spark, str(tmp_path / "chunks"))  # never synced: empty
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    idx = ensure_chunk_ann_index(store, ixs)
+    idx = ensure_chunk_ann_index(store)
     assert idx == {}
-    assert ixs.load(store.version_token()) is None  # nothing persisted
+    misses = artifacts.stats("ann_index")["misses"]
+    assert ensure_chunk_ann_index(store) == {}  # nothing cached: trains again
+    assert artifacts.stats("ann_index")["misses"] == misses + 1
 
     _, chunks = _mini_corpus(spark, n_filler=2)
     rows = query_documentation_routed(chunks, "alpha", index=idx, k=2).collect()
@@ -300,23 +327,37 @@ def test_routed_api_empty_index_and_bad_nprobe(spark, tmp_path):
         query_documentation_routed(chunks, "alpha", nprobe=0, k=2)
 
 
-def test_index_store_rejects_malformed_payload_shapes(spark, tmp_path):
+def test_index_store_rejects_malformed_payload_shapes(tmp_path, monkeypatch):
     """Review r14: corrupt-reads-as-absent must hold for VALID-JSON shapes
-    too — null, scalars, missing/non-dict centroids, non-numeric cells."""
-    from doc2vec_spark.index_store import INDEX_KEY, AnnIndexStore
+    too — null, scalars, a missing/non-object payload, non-numeric cells —
+    through the store index's own decoder: each reads as a rejected entry
+    and rebuilds."""
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators.serving import _decode_index
 
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    tok = (1, ())
-    ixs.save({0: [1.0]}, tok)
-    ver = __import__("json").loads(ixs.kv.get(INDEX_KEY))["version"]
+    root = tmp_path / "cache"
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
+    artifacts.clear_memory()
+    good = {"0": [1.0]}
+    artifacts.get_or_build("ann_index", lambda: ("v",), lambda: good, _decode_index)
+    (entry,) = root.glob("*.json")
+    key = json.loads(entry.read_text())["k"]
     for bad in (
         "null",
         "5",
         '"x"',
         "[]",
-        '{"version": %r}' % ver,
-        '{"version": %r, "centroids": 7}' % ver,
-        '{"version": %r, "centroids": {"not-an-int": [1.0]}}' % ver,
+        json.dumps({"k": key}),
+        json.dumps({"k": key, "v": 7}),
+        json.dumps({"k": key, "v": {"not-an-int": [1.0]}}),
     ):
-        ixs.kv.put(INDEX_KEY, bad)
-        assert ixs.load(tok) is None, bad
+        entry.write_text(bad)
+        artifacts.clear_memory()
+        before = artifacts.stats("ann_index")
+        out = artifacts.get_or_build(
+            "ann_index", lambda: ("v",), lambda: good, _decode_index
+        )
+        after = artifacts.stats("ann_index")
+        assert out == {0: [1.0]}, bad
+        assert after["rejected"] == before["rejected"] + 1, bad
+        assert after["misses"] == before["misses"] + 1, bad

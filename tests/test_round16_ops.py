@@ -1,14 +1,15 @@
 """Round-16 behavioral tests: PQ-codebook persistence
-(index_store.ensure_pq_codebooks — VERDICT r15 #3), value-level
-index-store validation and the caller-frame persistence bypass (ADVICE
-r14 #1/#3 via VERDICT r15 #4), the cross-session trained-quantizer disk
-tier (train_cache.py), and the unigram piece-cost broadcast-join plan
-assertion promised by test_round15_ops's docstring.
+(serving.ensure_pq_codebooks — VERDICT r15 #3), value-level validation
+of cached store indexes and the caller-frame persistence bypass (ADVICE
+r14 #1/#3 via VERDICT r15 #4), the cross-session disk tier of the
+trained-artifact cache (artifacts.py), and the unigram piece-cost
+broadcast-join plan assertion promised by test_round15_ops's docstring.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -34,31 +35,50 @@ def _sync_store(spark, tmp_path, markdowns):
 # ---------------------------------------------------------------------------
 
 
+@pytest.fixture
+def cache_dir(tmp_path, monkeypatch):
+    from doc2vec_spark import artifacts
+
+    root = tmp_path / "cache"
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
+    artifacts.clear_memory()
+    yield root
+    artifacts.clear_memory()
+
+
+def _count(kind, event):
+    from doc2vec_spark import artifacts
+
+    return artifacts.stats(kind)[event]
+
+
 def test_pq_codebooks_persist_and_serve_without_retraining(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, cache_dir
 ):
-    """A fresh consumer over the same KV path must LOAD the trained
+    """A fresh session over the same disk tier must LOAD the trained
     codebooks, never retrain (the BENCH_r15 8.6 s first-rep stall); a
     rewrite of the chunk data moves the version token and retrains."""
-    from doc2vec_spark import index_store as ixs_mod
-    from doc2vec_spark.index_store import AnnIndexStore, ensure_pq_codebooks
+    from doc2vec_spark import artifacts
     from doc2vec_spark.operators import serving
+    from doc2vec_spark.operators.serving import ensure_pq_codebooks
     from doc2vec_spark.sync import sync_documents
 
     bodies = [f"# D{i}\ndocumentation paragraph about topic {i}. " * 25 for i in range(6)]
     store = _sync_store(spark, tmp_path, bodies)
-    kv_path = str(tmp_path / "sync_state.json")
 
-    cbs1 = ensure_pq_codebooks(store, AnnIndexStore(kv_path))
+    cbs1 = ensure_pq_codebooks(store)
     assert cbs1 and all(isinstance(w[0], float) for m in cbs1 for w in m)
 
     def _no_train(*a, **k):
         raise AssertionError("retrained despite current persisted codebooks")
 
-    monkeypatch.setattr(serving, "train_chunk_pq_codebooks", _no_train)
-    cbs2 = ensure_pq_codebooks(store, AnnIndexStore(kv_path))
+    artifacts.clear_memory()
+    with monkeypatch.context() as m:
+        m.setattr(serving, "train_chunk_pq_codebooks", _no_train)
+        hits = _count("ann_pq", "disk_hits")
+        cbs2 = ensure_pq_codebooks(store)
+        assert _count("ann_pq", "disk_hits") == hits + 1
     assert cbs2 == cbs1
-    monkeypatch.undo()
 
     docs2 = spark.createDataFrame(
         [
@@ -68,40 +88,57 @@ def test_pq_codebooks_persist_and_serve_without_retraining(
         "url string, markdown string, product_name string, version string",
     )
     sync_documents(spark, store, docs2)
-    assert AnnIndexStore(kv_path).load_pq(store.version_token()) is None
-    cbs3 = ensure_pq_codebooks(store, AnnIndexStore(kv_path))
+    misses = _count("ann_pq", "misses")
+    cbs3 = ensure_pq_codebooks(store)  # stale-by-commit: retrains
+    assert _count("ann_pq", "misses") == misses + 1
     assert cbs3 != cbs1
-    assert AnnIndexStore(kv_path).load_pq(store.version_token()) == cbs3
+    assert ensure_pq_codebooks(store) == cbs3
+    assert _count("ann_pq", "misses") == misses + 1
 
 
-def test_pq_and_coarse_persist_side_by_side(spark, tmp_path):
-    """One KV file holds both quantizers under independent keys; invalidate
-    clears both."""
-    from doc2vec_spark.index_store import (
-        AnnIndexStore,
+def test_pq_and_coarse_persist_side_by_side(spark, tmp_path, cache_dir):
+    """Both quantizers are cached under the same commit token as
+    independent kinds; one commit invalidates both."""
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators.serving import (
         ensure_chunk_ann_index,
         ensure_pq_codebooks,
     )
+    from doc2vec_spark.sync import sync_documents
 
     store = _sync_store(
         spark, tmp_path, [f"# D{i}\ncorpus text {i}. " * 25 for i in range(4)]
     )
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    idx = ensure_chunk_ann_index(store, ixs)
-    cbs = ensure_pq_codebooks(store, ixs)
-    tok = store.version_token()
-    assert ixs.load(tok) == idx and ixs.load_pq(tok) == cbs
-    ixs.invalidate()
-    assert ixs.load(tok) is None and ixs.load_pq(tok) is None
+    idx = ensure_chunk_ann_index(store)
+    cbs = ensure_pq_codebooks(store)
+    assert len(list(cache_dir.glob("*.json"))) == 2
+    artifacts.clear_memory()
+    hits = (_count("ann_index", "disk_hits"), _count("ann_pq", "disk_hits"))
+    assert ensure_chunk_ann_index(store) == idx and ensure_pq_codebooks(store) == cbs
+    assert (_count("ann_index", "disk_hits"), _count("ann_pq", "disk_hits")) == (
+        hits[0] + 1,
+        hits[1] + 1,
+    )
+    docs2 = spark.createDataFrame(
+        [(f"https://d/{i}", f"# D{i}\nnew text {i}. " * 25, "prod", "2.0") for i in range(4)],
+        "url string, markdown string, product_name string, version string",
+    )
+    sync_documents(spark, store, docs2)
+    misses = (_count("ann_index", "misses"), _count("ann_pq", "misses"))
+    ensure_chunk_ann_index(store)
+    ensure_pq_codebooks(store)
+    assert (_count("ann_index", "misses"), _count("ann_pq", "misses")) == (
+        misses[0] + 1,
+        misses[1] + 1,
+    )
 
 
-def test_caller_frame_bypasses_persistence(spark, tmp_path, monkeypatch):
+def test_caller_frame_bypasses_persistence(spark, tmp_path, monkeypatch, cache_dir):
     """ADVICE r14 #3: a caller-supplied chunks frame has no verifiable
     derivation from the committed store — it must neither read nor write
-    the persisted index (a mispaired index would become 'current' for
-    every later session)."""
-    from doc2vec_spark.index_store import (
-        AnnIndexStore,
+    the cached index (a mispaired index would become 'current' for every
+    later session)."""
+    from doc2vec_spark.operators.serving import (
         ensure_chunk_ann_index,
         ensure_pq_codebooks,
     )
@@ -109,18 +146,22 @@ def test_caller_frame_bypasses_persistence(spark, tmp_path, monkeypatch):
     store = _sync_store(
         spark, tmp_path, [f"# D{i}\nsome corpus text {i}. " * 25 for i in range(4)]
     )
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
     # a filtered frame — NOT the committed chunk set
     subset = store.read().limit(2)
-    idx = ensure_chunk_ann_index(store, ixs, chunks=subset)
-    cbs = ensure_pq_codebooks(store, ixs, chunks=subset)
+    idx = ensure_chunk_ann_index(store, chunks=subset)
+    cbs = ensure_pq_codebooks(store, chunks=subset)
     assert idx and cbs
-    # nothing persisted under the committed token
-    tok = store.version_token()
-    assert ixs.load(tok) is None and ixs.load_pq(tok) is None
-    # and a persisted full-store index is NOT served to a caller frame:
-    full = ensure_chunk_ann_index(store, ixs)
-    assert ixs.load(tok) == full
+    # nothing cached under the committed token: the full-store calls train
+    assert not list(cache_dir.glob("*.json"))
+    misses = (_count("ann_index", "misses"), _count("ann_pq", "misses"))
+    full = ensure_chunk_ann_index(store)
+    ensure_pq_codebooks(store)
+    assert (_count("ann_index", "misses"), _count("ann_pq", "misses")) == (
+        misses[0] + 1,
+        misses[1] + 1,
+    )
+    assert ensure_chunk_ann_index(store) == full  # now cached
+    # and a cached full-store index is NOT served to a caller frame:
     from doc2vec_spark.operators import serving
 
     calls = []
@@ -128,22 +169,17 @@ def test_caller_frame_bypasses_persistence(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         serving, "build_chunk_ann_index", lambda f: calls.append(1) or real(f)
     )
-    ensure_chunk_ann_index(store, ixs, chunks=subset)
-    assert calls, "caller frame must train fresh, not read the persisted index"
+    hits = _count("ann_index", "memory_hits")
+    ensure_chunk_ann_index(store, chunks=subset)
+    assert calls, "caller frame must train fresh, not read the cached index"
+    assert _count("ann_index", "memory_hits") == hits
 
 
 # ---------------------------------------------------------------------------
-# value-level load validation (ADVICE r14 #1): corrupt payloads read as
-# absent — never load, never crash later inside cell_assignment_col
+# value-level validation (ADVICE r14 #1): corrupt payloads read as absent —
+# never load, never crash later inside cell_assignment_col. The decoders
+# are what get_or_build applies to every stored entry.
 # ---------------------------------------------------------------------------
-
-
-def _kv_with(tmp_path, key, payload):
-    from doc2vec_spark.index_store import AnnIndexStore
-
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    ixs.kv.put(key, json.dumps(payload))
-    return ixs
 
 
 @pytest.mark.parametrize(
@@ -161,27 +197,16 @@ def _kv_with(tmp_path, key, payload):
     ],
 )
 def test_corrupt_centroid_values_read_as_absent(tmp_path, cents):
-    from doc2vec_spark.index_store import INDEX_KEY, _token_str
+    from doc2vec_spark.operators.serving import _decode_index
 
-    tok = ("v", 1)
-    ixs = _kv_with(
-        tmp_path, INDEX_KEY, {"version": _token_str(tok), "centroids": cents}
-    )
-    assert ixs.load(tok) is None
+    assert _decode_index(json.loads(json.dumps(cents))) is None
 
 
 def test_nan_centroid_reads_as_absent(tmp_path):
     # NaN survives json round-trips as a non-finite float
-    from doc2vec_spark.index_store import AnnIndexStore, INDEX_KEY, _token_str
+    from doc2vec_spark.operators.serving import _decode_index
 
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    tok = ("v", 1)
-    ixs.kv.put(
-        INDEX_KEY,
-        '{"version": %s, "centroids": {"0": [NaN, 0.2]}}'
-        % json.dumps(_token_str(tok)),
-    )
-    assert ixs.load(tok) is None
+    assert _decode_index(json.loads('{"0": [NaN, 0.2]}')) is None
 
 
 @pytest.mark.parametrize(
@@ -196,101 +221,119 @@ def test_nan_centroid_reads_as_absent(tmp_path):
     ],
 )
 def test_corrupt_pq_payloads_read_as_absent(tmp_path, cbs):
-    from doc2vec_spark.index_store import PQ_KEY, _token_str
+    from doc2vec_spark.operators.serving import _decode_codebooks
 
-    tok = ("v", 1)
-    ixs = _kv_with(
-        tmp_path, PQ_KEY, {"version": _token_str(tok), "codebooks": cbs}
-    )
-    assert ixs.load_pq(tok) is None
+    assert _decode_codebooks(cbs) is None
 
 
 def test_valid_payload_still_loads(tmp_path):
-    from doc2vec_spark.index_store import AnnIndexStore
+    from doc2vec_spark.operators.serving import _decode_codebooks, _decode_index
 
-    ixs = AnnIndexStore(str(tmp_path / "kv.json"))
-    tok = ("v", 7)
-    ixs.save({3: [0.5, -0.25], 0: [1.0, 2.0]}, tok)
-    ixs.save_pq([[[0.1, 0.2]], [[0.3, 0.4]]], tok)
-    assert ixs.load(tok) == {0: [1.0, 2.0], 3: [0.5, -0.25]}
-    assert ixs.load_pq(tok) == [[[0.1, 0.2]], [[0.3, 0.4]]]
-    assert ixs.load(("other", 1)) is None  # stale-by-commit unchanged
+    assert _decode_index({"3": [0.5, -0.25], "0": [1.0, 2.0]}) == {
+        0: [1.0, 2.0],
+        3: [0.5, -0.25],
+    }
+    assert _decode_codebooks([[[0.1, 0.2]], [[0.3, 0.4]]]) == [
+        [[0.1, 0.2]],
+        [[0.3, 0.4]],
+    ]
+    # stale-by-commit: another token is another key
+    from doc2vec_spark import artifacts
+
+    mod = "doc2vec_spark.operators.serving"
+    assert artifacts._key("ann_index", ("s", ("v", 7)), mod) != artifacts._key(
+        "ann_index", ("s", ("other", 1)), mod
+    )
 
 
 # ---------------------------------------------------------------------------
-# cross-session trained-quantizer disk tier (train_cache.py)
+# cross-session disk tier of the trained-artifact cache (artifacts.py)
 # ---------------------------------------------------------------------------
 
 
-def test_train_cache_round_trip_and_eviction(tmp_path, monkeypatch):
-    from doc2vec_spark import train_cache
+def _put(kind, key, value):
+    from doc2vec_spark import artifacts
 
-    path = tmp_path / "cache"  # r17: a DIRECTORY of per-entry files
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(path))
-    assert train_cache.get("km", ("a",)) is None
-    train_cache.put("km", ("a",), {"0": [1, 2]})
-    assert train_cache.get("km", ("a",)) == {"0": [1, 2]}
+    return artifacts.get_or_build(kind, lambda: key, lambda: value, lambda p: p)
+
+
+def _disk_get(kind, key):
+    """The disk tier's entry for (kind, key), or None: a miss builds None
+    (returned, never stored)."""
+    from doc2vec_spark import artifacts
+
+    artifacts.clear_memory()
+    return artifacts.get_or_build(kind, lambda: key, lambda: None, lambda p: p)
+
+
+def test_train_cache_round_trip_and_eviction(cache_dir, monkeypatch):
+    from doc2vec_spark import artifacts
+
+    path = cache_dir  # a DIRECTORY of per-entry files
+    assert _disk_get("km", ("a",)) is None
+    _put("km", ("a",), {"0": [1, 2]})
+    assert _disk_get("km", ("a",)) == {"0": [1, 2]}
     # kind separates namespaces
-    assert train_cache.get("pq", ("a",)) is None
+    assert _disk_get("pq", ("a",)) is None
     # eviction keeps the most recent MAX_ENTRIES (oldest-mtime swept; give
     # each entry a distinct mtime so "oldest" is filesystem-independent)
-    import os
 
-    os.utime(train_cache._entry_path(path, "km:('a',)"), (1, 1))
-    for i in range(train_cache.MAX_ENTRIES + 5):
-        train_cache.put("km", ("k", i), [i])
-        os.utime(train_cache._entry_path(path, f"km:{('k', i)!r}"), (i + 2, i + 2))
-    assert train_cache.get("km", ("a",)) is None  # oldest evicted
-    assert train_cache.get("km", ("k", train_cache.MAX_ENTRIES + 4)) == [
-        train_cache.MAX_ENTRIES + 4
+    def entry(key):
+        return artifacts._entry_path(path, artifacts._key("km", key, __name__))
+
+    os.utime(entry(("a",)), (1, 1))
+    for i in range(artifacts.MAX_ENTRIES + 5):
+        _put("km", ("k", i), [i])
+        os.utime(entry(("k", i)), (i + 2, i + 2))
+    assert _disk_get("km", ("a",)) is None  # oldest evicted
+    assert _disk_get("km", ("k", artifacts.MAX_ENTRIES + 4)) == [
+        artifacts.MAX_ENTRIES + 4
     ]
-    # corrupt entry file reads as absent, then heals on the next put
-    key = ("k", train_cache.MAX_ENTRIES + 3)
-    train_cache._entry_path(path, f"km:{key!r}").write_text("{not json")
-    assert train_cache.get("km", key) is None
-    train_cache.put("km", ("z",), [9])
-    assert train_cache.get("km", ("z",)) == [9]
+    # corrupt entry file reads as absent, then heals on the next build
+    key = ("k", artifacts.MAX_ENTRIES + 3)
+    entry(key).write_text("{not json")
+    assert _disk_get("km", key) is None
+    _put("km", ("z",), [9])
+    assert _disk_get("km", ("z",)) == [9]
     # empty env value disables the tier
-    monkeypatch.setenv(train_cache.CACHE_ENV, "")
-    train_cache.put("km", ("d",), [1])
-    assert train_cache.get("km", ("d",)) is None
+    monkeypatch.setenv(artifacts.CACHE_ENV, "")
+    _put("km", ("d",), [1])
+    assert _disk_get("km", ("d",)) is None
 
 
 def test_trained_quantizers_served_from_disk_in_fresh_process_state(
-    spark, tmp_path, monkeypatch
+    spark, cache_dir
 ):
-    """Simulate a fresh session: clear the in-process memos, point the disk
-    tier at a private file, train once, clear memos again, and prove the
-    second call does not run the Lloyd loop (sample collection raises)."""
-    from doc2vec_spark import train_cache
+    """Simulate a fresh session: empty in-process tier, a private disk
+    tier; train once, clear the in-process tier again, and prove the second
+    call does not run the Lloyd loop: two disk hits and no Spark job."""
+    from doc2vec_spark import artifacts
     from doc2vec_spark.operators import kmeans as km
     from doc2vec_spark.operators import serving as sv
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
     cents1 = km.train_kmeans(spark, SF_DIR)
     cbs1 = sv.train_pq_codebooks(spark, SF_DIR)
     assert cents1 and cbs1
 
-    def _no_sample(*a, **k):
-        raise AssertionError("retrained despite a current disk-tier entry")
-
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
-    monkeypatch.setattr(km, "_sample_e", _no_sample)
+    artifacts.clear_memory()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(None) or [])
+    before = artifacts.stats()
     assert km.train_kmeans(spark, SF_DIR) == cents1
     assert sv.train_pq_codebooks(spark, SF_DIR) == cbs1
+    after = artifacts.stats()
+    assert after["disk_hits"] == before["disk_hits"] + 2
+    assert after["misses"] == before["misses"]
+    assert len(tracker.getJobIdsForGroup(None) or []) == jobs
 
 
-def test_disk_tier_key_carries_the_spec_digest(tmp_path, monkeypatch):
+def test_disk_tier_key_carries_the_spec_digest(cache_dir):
     """An algorithm edit (different module digest) must MISS — a stale
     trained artifact served across a code change would silently diverge
     from the oracle."""
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
-    d1 = train_cache.module_digest("doc2vec_spark.operators.kmeans")
+    d1 = artifacts.module_digest("doc2vec_spark.operators.kmeans")
     # the digest folds the spec-hash closure digest (what the driver-stamp
     # discipline reopens on) WITH the universal-module stamp: closure
     # digests deliberately exclude tables/session/spec/caching, but a
@@ -299,45 +342,49 @@ def test_disk_tier_key_carries_the_spec_digest(tmp_path, monkeypatch):
 
     closure = spec_hashes._closure_digests()["doc2vec_spark.operators.kmeans"]
     assert d1 == closure + ":" + spec_hashes.universal_hash()
-    train_cache.put("km", ("sf", "fp", d1), {"0": [1]})
-    assert train_cache.get("km", ("sf", "fp", "other-digest")) is None
+    k1 = artifacts._key("km", ("sf", "fp"), "doc2vec_spark.operators.kmeans")
+    assert k1.endswith(d1)
+    _put("km", ("sf", "fp"), {"0": [1]})
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(artifacts, "module_digest", lambda mod: "other-digest")
+        assert _disk_get("km", ("sf", "fp")) is None
+    assert _disk_get("km", ("sf", "fp")) == {"0": [1]}
     # unknown module: digest falls back to the dotted name (still a key,
     # still universal-stamped)
-    assert train_cache.module_digest("not.a.module").startswith("not.a.module:")
+    assert artifacts.module_digest("not.a.module").startswith("not.a.module:")
 
 
 def test_value_corrupt_disk_entries_fall_through_to_retrain(
-    spark, tmp_path, monkeypatch
+    spark, monkeypatch, cache_dir
 ):
     """A valid-JSON cache entry with wrong-typed values must read as
     absent (retrain), never raise into the query path (round-16 review:
-    the index_store value-validation lesson applies to this tier too)."""
-    from doc2vec_spark import train_cache
+    the index-store value-validation lesson applies to this tier too)."""
+    from doc2vec_spark import artifacts
     from doc2vec_spark.operators import kmeans as km
     from doc2vec_spark.operators import serving as sv
+    from doc2vec_spark.operators.coreset import dataset_version
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
-    kd = train_cache.module_digest("doc2vec_spark.operators.kmeans")
-    sd = train_cache.module_digest("doc2vec_spark.operators.serving")
-    from doc2vec_spark.operators.coreset import dataset_fingerprint
-    from doc2vec_spark.operators.kmeans import KM_ITERS, KM_K
-    from doc2vec_spark.operators.similarity import PQ_K, PQ_M
-
-    fp = dataset_fingerprint(SF_DIR)
-    km_key = (SF_DIR, fp, KM_K, KM_ITERS) + (kd,)
-    pq_key = (SF_DIR, fp, PQ_M, PQ_K, sv.PQ_TRAIN_ITERS) + (sd,)
+    ver = dataset_version(SF_DIR)
+    km_key = artifacts._key("km", ver, km.__name__)
+    pq_key = artifacts._key("pq", ver, sv.__name__)
+    km_path = artifacts._entry_path(cache_dir, km_key)
+    pq_path = artifacts._entry_path(cache_dir, pq_key)
+    cache_dir.mkdir()
     for bad in ({"0": "abc"}, {"0": 5}, {"x": [1]}, {"0": []}):
-        train_cache.put("km", km_key, bad)
+        km_path.write_text(json.dumps({"k": km_key, "v": bad}))
+        artifacts.clear_memory()
+        rejected = artifacts.stats("km")["rejected"]
         cents = km.train_kmeans(spark, SF_DIR)  # retrains, no crash
         assert cents and all(isinstance(v[0], int) for v in cents.values())
-        monkeypatch.setattr(km, "_TRAIN_MEMO", {})
+        assert artifacts.stats("km")["rejected"] == rejected + 1
     for bad in ("abc", [[]], [["ab"]], [[[1, "x"]]], [5]):
-        train_cache.put("pq", pq_key, bad)
+        pq_path.write_text(json.dumps({"k": pq_key, "v": bad}))
+        artifacts.clear_memory()
+        rejected = artifacts.stats("pq")["rejected"]
         cbs = sv.train_pq_codebooks(spark, SF_DIR)  # retrains, no crash
         assert cbs and isinstance(cbs[0][0][0], float)
-        monkeypatch.setattr(sv, "_PQ_TRAIN_MEMO", {})
+        assert artifacts.stats("pq")["rejected"] == rejected + 1
 
 
 # ---------------------------------------------------------------------------
@@ -357,16 +404,12 @@ def test_unigram_segment_plans_a_broadcast_piece_cost_join(spark):
     assert len(plan) < 200_000
 
 
-def test_train_cache_round_trips_arbitrary_json_values(tmp_path, monkeypatch):
-    """Hypothesis property: any JSON-representable artifact survives
-    put/get bitwise (the disk tier's 'hit is bitwise the retrain result'
-    claim rests on exact JSON float round-trips)."""
-    from hypothesis import given, settings
+def test_train_cache_round_trips_arbitrary_json_values(cache_dir):
+    """Hypothesis property: any non-empty JSON-representable artifact
+    survives a disk round trip bitwise (the disk tier's 'hit is bitwise
+    the retrain result' claim rests on exact JSON float round-trips)."""
+    from hypothesis import assume, given, settings
     from hypothesis import strategies as st
-
-    from doc2vec_spark import train_cache
-
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc.json"))
 
     leaf = st.one_of(
         st.integers(min_value=-(2**53), max_value=2**53),
@@ -381,8 +424,9 @@ def test_train_cache_round_trips_arbitrary_json_values(tmp_path, monkeypatch):
     @settings(max_examples=60, deadline=None)
     @given(v=value, key_i=st.integers(min_value=0, max_value=5))
     def prop(v, key_i):
-        train_cache.put("km", ("prop", key_i), v)
-        assert train_cache.get("km", ("prop", key_i)) == v
+        assume(v)  # empty artifacts are never stored
+        _put("km", ("prop", key_i, repr(v)), v)
+        assert _disk_get("km", ("prop", key_i, repr(v))) == v
 
     prop()
 

@@ -92,26 +92,55 @@ def test_hybrid_engine_matches_oracle_on_duplicate_probe_id(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# train_cache per-entry-file layout (VERDICT r16 #4) + shared validators
+# artifact-cache per-entry-file layout (VERDICT r16 #4) + shared validators
 # (ADVICE r16 #1/#2)
 # ---------------------------------------------------------------------------
 
 
-def test_train_cache_two_writers_lose_nothing(tmp_path, monkeypatch):
-    """The r16 single-JSON layout read-merge-wrote the whole store, so two
-    concurrent writers could drop each other's entry. Per-entry files make
-    every put an independent atomic replace: after two threads write
-    disjoint key sets concurrently, EVERY entry is present."""
+@pytest.fixture
+def cache_dir(tmp_path, monkeypatch):
+    from doc2vec_spark import artifacts
+
+    root = tmp_path / "tc"
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
+    artifacts.clear_memory()
+    yield root
+    artifacts.clear_memory()
+
+
+def _put(key, value):
+    from doc2vec_spark import artifacts
+
+    return artifacts.get_or_build("km", lambda: key, lambda: value, lambda p: p)
+
+
+def _disk_get(key):
+    from doc2vec_spark import artifacts
+
+    artifacts.clear_memory()
+    return artifacts.get_or_build("km", lambda: key, lambda: None, lambda p: p)
+
+
+def _entry(root, key):
+    from doc2vec_spark import artifacts
+
+    return artifacts._entry_path(root, artifacts._key("km", key, __name__))
+
+
+def test_train_cache_two_writers_lose_nothing(cache_dir):
+    """A single-file layout that read-merge-writes the whole store lets two
+    concurrent writers drop each other's entry. Per-entry files make
+    every write an independent atomic replace: after two threads write
+    disjoint key sets concurrently, EVERY entry is on disk."""
     import threading
 
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc"))
-    per_writer = train_cache.MAX_ENTRIES // 2  # stay inside the bound
+    per_writer = artifacts.MAX_ENTRIES // 2  # stay inside the bound
 
     def writer(tag):
         for i in range(per_writer):
-            train_cache.put("km", (tag, i), [tag, i])
+            _put((tag, i), [tag, i])
 
     threads = [threading.Thread(target=writer, args=(t,)) for t in ("a", "b")]
     for t in threads:
@@ -120,47 +149,46 @@ def test_train_cache_two_writers_lose_nothing(tmp_path, monkeypatch):
         t.join()
     for tag in ("a", "b"):
         for i in range(per_writer):
-            assert train_cache.get("km", (tag, i)) == [tag, i], (tag, i)
+            assert _disk_get((tag, i)) == [tag, i], (tag, i)
 
 
-def test_train_cache_entry_key_verified_on_read(tmp_path, monkeypatch):
+def test_train_cache_entry_key_verified_on_read(cache_dir):
     """Each entry file records its full logical key; a mismatch (hand edit,
     hash-prefix collision) reads as absent — never the wrong artifact."""
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc"))
-    train_cache.put("km", ("x",), [1])
-    p = train_cache._entry_path(tmp_path / "tc", "km:('x',)")
-    assert train_cache.get("km", ("x",)) == [1]
+    _put(("x",), [1])
+    p = _entry(cache_dir, ("x",))
+    assert _disk_get(("x",)) == [1]
     import json
 
     payload = json.loads(p.read_text())
-    payload["k"] = "km:('other',)"
+    payload["k"] = artifacts._key("km", ("other",), __name__)
     p.write_text(json.dumps(payload))
-    assert train_cache.get("km", ("x",)) is None
+    rejected = artifacts.stats("km")["rejected"]
+    assert _disk_get(("x",)) is None
+    assert artifacts.stats("km")["rejected"] == rejected + 1
     p.write_text("{not json")  # corrupt file also reads as absent
-    assert train_cache.get("km", ("x",)) is None
+    assert _disk_get(("x",)) is None
 
 
-def test_train_cache_eviction_bound_on_files(tmp_path, monkeypatch):
-    """Same MAX_ENTRIES bound as r16, now enforced as an oldest-mtime file
-    sweep; a vanished file mid-eviction is skipped, not raised."""
+def test_train_cache_eviction_bound_on_files(cache_dir):
+    """The disk tier holds at most MAX_ENTRIES, enforced as an
+    oldest-mtime file sweep; a vanished file mid-eviction is skipped, not
+    raised."""
     import os
 
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
-    root = tmp_path / "tc"
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(root))
-    for i in range(train_cache.MAX_ENTRIES + 5):
-        train_cache.put("km", ("k", i), [i])
+    for i in range(artifacts.MAX_ENTRIES + 5):
+        _put(("k", i), [i])
         # distinct mtimes so "oldest" is well-defined on coarse filesystems
-        p = train_cache._entry_path(root, f"km:{('k', i)!r}")
-        os.utime(p, (i, i))
-    train_cache.put("km", ("fresh",), [99])
-    files = list(root.glob("*.json"))
-    assert len(files) <= train_cache.MAX_ENTRIES
-    assert train_cache.get("km", ("fresh",)) == [99]
-    assert train_cache.get("km", ("k", 0)) is None  # oldest gone
+        os.utime(_entry(cache_dir, ("k", i)), (i, i))
+    _put(("fresh",), [99])
+    files = list(cache_dir.glob("*.json"))
+    assert len(files) <= artifacts.MAX_ENTRIES
+    assert _disk_get(("fresh",)) == [99]
+    assert _disk_get(("k", 0)) is None  # oldest gone
 
 
 @pytest.mark.parametrize(
@@ -194,25 +222,25 @@ def test_train_cache_eviction_bound_on_files(tmp_path, monkeypatch):
     ],
 )
 def test_shared_validators(fn, val, ok):
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
-    assert getattr(train_cache, fn)(val) == ok
+    assert getattr(artifacts, fn)(val) == ok
 
 
-def test_kmeans_hit_survives_infinity_payload(spark, tmp_path, monkeypatch):
+def test_kmeans_hit_survives_infinity_payload(spark, cache_dir):
     """ADVICE r16 #1 exactly: a JSON ``Infinity`` component used to raise
     OverflowError inside int() on the query path; it must read as absent
     and retrain."""
-    from doc2vec_spark import train_cache
-    from doc2vec_spark.operators import kmeans as km
-    from doc2vec_spark.operators.coreset import dataset_fingerprint
+    import json
 
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(tmp_path / "tc"))
-    monkeypatch.setattr(km, "_TRAIN_MEMO", {})
-    kd = train_cache.module_digest("doc2vec_spark.operators.kmeans")
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators import kmeans as km
+    from doc2vec_spark.operators.coreset import dataset_version
     from tests.conftest import SF_DIR
 
-    key = (SF_DIR, dataset_fingerprint(SF_DIR), km.KM_K, km.KM_ITERS) + (kd,)
+    key = artifacts._key("km", dataset_version(SF_DIR), km.__name__)
+    path = artifacts._entry_path(cache_dir, key)
+    cache_dir.mkdir()
     for bad in (
         {"0": [float("inf")]},          # the OverflowError crash shape
         {"0": [1.5]},                   # non-integer component
@@ -220,19 +248,27 @@ def test_kmeans_hit_survives_infinity_payload(spark, tmp_path, monkeypatch):
         {"150": [1]},                   # cell id past the %100 packing cap
         {"-1": [1]},                    # negative cell id
     ):
-        train_cache.put("km", key, bad)
+        path.write_text(json.dumps({"k": key, "v": bad}))
+        artifacts.clear_memory()
+        rejected = artifacts.stats("km")["rejected"]
         cents = km.train_kmeans(spark, SF_DIR)  # retrains, no crash
         assert cents and all(isinstance(v[0], int) for v in cents.values())
-        monkeypatch.setattr(km, "_TRAIN_MEMO", {})
+        assert artifacts.stats("km")["rejected"] == rejected + 1
 
 
 def test_index_store_validator_is_the_shared_one():
-    """index_store and train_cache must enforce ONE value discipline
-    (ADVICE r16 #2): same function object, same packing cap."""
-    from doc2vec_spark import index_store, train_cache
+    """Every decoder enforces ONE value discipline (ADVICE r16 #2): the
+    store index and the routed index decode through artifacts' shared
+    validators, so they accept and reject exactly what those accept."""
+    from doc2vec_spark import artifacts
+    from doc2vec_spark.operators import coreset, serving
 
-    assert index_store._finite_floats is train_cache.finite_components
-    assert index_store.CELL_ID_CAP == train_cache.CELL_ID_CAP
+    assert serving.finite_components is artifacts.finite_components
+    assert coreset.cell_id is artifacts.cell_id
+    cap = artifacts.CELL_ID_CAP
+    assert serving._decode_index({str(cap - 1): [1.0]}) == {cap - 1: [1.0]}
+    assert serving._decode_index({str(cap): [1.0]}) is None
+    assert serving._decode_index({"0": [1.0], "00": [2.0]}) is None  # aliasing
 
 
 # ---------------------------------------------------------------------------
@@ -328,24 +364,33 @@ try:
     def test_validators_are_total_functions(v):
         """Any corrupt payload shape must map to a value or None — an
         exception here IS the r16 OverflowError bug class."""
-        from doc2vec_spark import train_cache
+        from doc2vec_spark import artifacts
+        from doc2vec_spark.operators import coreset, serving
 
         for fn in (
-            train_cache.finite_components,
-            train_cache.integer_components,
-            train_cache.cell_id,
+            artifacts.finite_components,
+            artifacts.integer_components,
+            artifacts.cell_id,
         ):
             out = fn(v)  # must not raise
             assert out is None or isinstance(out, (int, list))
+        # the payload decoders built on them are total as well
+        for fn in (
+            serving._decode_index,
+            serving._decode_codebooks,
+            coreset._decode_centers,
+        ):
+            out = fn(v)  # must not raise
+            assert out is None or isinstance(out, (dict, list))
 
     @given(st.text(max_size=12))
     @settings(max_examples=300, deadline=None)
     def test_cell_id_on_text_never_raises_and_roundtrips(s):
-        from doc2vec_spark import train_cache
+        from doc2vec_spark import artifacts
 
-        out = train_cache.cell_id(s)
+        out = artifacts.cell_id(s)
         if out is not None:  # accepted keys are canonical ASCII decimals
-            assert 0 <= out < train_cache.CELL_ID_CAP
+            assert 0 <= out < artifacts.CELL_ID_CAP
             assert s.isascii() and s.isdigit() and int(s) == out
 
 except ImportError:  # hypothesis is baked into this env; belt and braces

@@ -1,7 +1,7 @@
 """Round-18 behavioral tests.
 
 Covers the r18 edits:
-- train_cache eviction ownership + serialization guard (ADVICE r17 #1/#2)
+- artifact-cache eviction ownership + serialization guard (ADVICE r17 #1/#2)
 - CC loop conf scoping: both variants restore AQE and shuffle-partition
   state, and size loop shuffles to the measured edge/state count
 - the bound-tokens shingle rewrite stays value-identical to the unbound
@@ -17,8 +17,14 @@ from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
-# train_cache: eviction only touches its own files (ADVICE r17 #1)
+# artifact cache: eviction only touches its own files (ADVICE r17 #1)
 # ---------------------------------------------------------------------------
+
+
+def _put(key, value, decode=lambda p: p):
+    from doc2vec_spark import artifacts
+
+    return artifacts.get_or_build("km", lambda: key, lambda: value, decode)
 
 
 def test_evict_never_unlinks_unrelated_json(tmp_path, monkeypatch):
@@ -27,11 +33,11 @@ def test_evict_never_unlinks_unrelated_json(tmp_path, monkeypatch):
     module wrote (and its own stale tmp files), never a bystander."""
     import os
 
-    from doc2vec_spark import train_cache
+    from doc2vec_spark import artifacts
 
     root = tmp_path / "tc"
     root.mkdir()
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(root))
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
     bystanders = ["config.json", "deadbeef.json", "a" * 31 + ".json", "G" * 32 + ".json"]
     for name in bystanders:
         (root / name).write_text("{}")
@@ -40,11 +46,11 @@ def test_evict_never_unlinks_unrelated_json(tmp_path, monkeypatch):
     os.utime(stale_foreign_tmp, (1, 1))  # ancient: would be reaped if owned
     for name in bystanders:
         os.utime(root / name, (1, 1))  # ancient: oldest-mtime if eligible
-    for i in range(train_cache.MAX_ENTRIES + 5):
-        train_cache.put("km", ("k", i), [i])
-        p = train_cache._entry_path(root, f"km:{('k', i)!r}")
+    for i in range(artifacts.MAX_ENTRIES + 5):
+        _put(("k", i), [i])
+        p = artifacts._entry_path(root, artifacts._key("km", ("k", i), __name__))
         os.utime(p, (1000 + i, 1000 + i))
-    train_cache.put("km", ("fresh",), [99])
+    _put(("fresh",), [99])
     for name in bystanders:
         assert (root / name).exists(), name
     assert stale_foreign_tmp.exists()
@@ -52,23 +58,28 @@ def test_evict_never_unlinks_unrelated_json(tmp_path, monkeypatch):
     import re
 
     owned = [p for p in root.glob("*.json") if re.fullmatch(r"[0-9a-f]{32}\.json", p.name)]
-    assert len(owned) <= train_cache.MAX_ENTRIES
+    assert len(owned) <= artifacts.MAX_ENTRIES
 
 
 def test_put_swallows_unserializable_value(tmp_path, monkeypatch):
     """ADVICE r17 #2: json.dumps raises TypeError on a non-serializable
     value; the 'never raise into the query path' contract covers that, not
-    just OSError. The failed put leaves no partial entry behind."""
-    from doc2vec_spark import train_cache
+    just OSError. The failed store leaves no entry and no partial file
+    behind, and the caller still gets the built artifact."""
+    from doc2vec_spark import artifacts
 
     root = tmp_path / "tc"
-    monkeypatch.setenv(train_cache.CACHE_ENV, str(root))
-    train_cache.put("km", ("bad",), object())  # must not raise
-    assert train_cache.get("km", ("bad",)) is None
+    monkeypatch.setenv(artifacts.CACHE_ENV, str(root))
+    artifacts.clear_memory()
+    bad = [object()]
+    assert _put(("bad",), bad) is bad  # must not raise
+    misses = artifacts.stats("km")["misses"]
+    assert _put(("bad",), [1, 2]) == [1, 2]  # nothing was cached
+    assert artifacts.stats("km")["misses"] == misses + 1
     assert not list(root.glob("*.tmp.*")) if root.exists() else True
-    # a later good put on the same key still works
-    train_cache.put("km", ("bad",), [1, 2])
-    assert train_cache.get("km", ("bad",)) == [1, 2]
+    # the later good build on the same key is cached
+    artifacts.clear_memory()
+    assert _put(("bad",), [3]) == [1, 2]
 
 
 # ---------------------------------------------------------------------------
